@@ -1988,9 +1988,9 @@ def _pair_alignment_oracle() -> str:
 
 
 def _cross_modal_topk_oracle() -> str:
-    """Mirror of _q_cross_modal_topk: caption_embed/phash_embed list
-    fragments, integer dot, image norm exactly sqrt(dims), per-query
-    row_number window."""
+    """Mirror of _q_cross_modal_topk: caption_embed_duckdb/
+    phash_embed_duckdb list fragments, integer dot, image norm exactly
+    sqrt(dims), per-query row_number window."""
     from webcrawler_spark.multimodal.alignment import (
         DIMS,
         caption_embed_duckdb,
@@ -2173,8 +2173,8 @@ def _resize_plan_oracle() -> str:
 
 
 def _caption_dedup_oracle() -> str:
-    """One-window mirror of _q_caption_dedup (two-phase election is
-    output-invariant): same synthesized captions, same caption
+    """One-window mirror of _q_caption_dedup (its single-aggregate
+    election is output-invariant): same synthesized captions, same caption
     fingerprint (lower + whitespace-collapse + portable 60-bit hash)."""
     fp = PORTABLE_HASH64_DUCKDB.format(
         col="lower(regexp_replace(caption, '\\s{2,}', ' ', 'g'))"
@@ -2633,8 +2633,7 @@ def oracle_sql() -> dict[str, str]:
                              OR canon_url LIKE '%.zip' THEN true ELSE false END AS is_binary
             FROM c ORDER BY id
         """,
-        "extraction_golden": _golden_oracle_values(),
-        "extraction_mode_a": _golden_oracle_mode_a(),
+        **_golden_oracles(),
         "corpus_curation": f"""
             WITH {_curation_oracle_ctes()}
             SELECT stage, n_docs, n_tokens FROM (
@@ -2782,6 +2781,22 @@ def oracle_sql() -> dict[str, str]:
 
 def _sql_escape(s: str) -> str:
     return s.replace("'", "''")
+
+
+# queries whose oracle is the reference's committed data_*.json goldens
+GOLDEN_QUERIES = ("extraction_golden", "extraction_mode_a")
+
+
+def _golden_oracles() -> dict[str, str]:
+    """The GOLDEN_QUERIES oracles, or none when the golden files are
+    absent — a missing oracle must not take down every other query's."""
+    try:
+        return {
+            "extraction_golden": _golden_oracle_values(),
+            "extraction_mode_a": _golden_oracle_mode_a(),
+        }
+    except FileNotFoundError:
+        return {}
 
 
 def _golden_oracle_values() -> str:

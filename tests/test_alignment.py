@@ -129,3 +129,87 @@ def test_cross_modal_topk_structure_and_scores(spark):
             assert r.score == pytest.approx(
                 _py_score(qcap, meta[r.image_id].phash), abs=1e-9
             )
+
+
+def _duckdb_scores(rows):
+    import duckdb
+    import pandas as pd
+
+    from webcrawler_spark.multimodal.alignment import alignment_score_duckdb
+
+    con = duckdb.connect()
+    con.register(
+        "p", pd.DataFrame(rows, columns=["image_id", "caption", "phash"])
+    )
+    return dict(con.execute(
+        "SELECT image_id, " + alignment_score_duckdb("caption", "phash")
+        + " FROM p"
+    ).fetchall())
+
+
+def test_one_pass_score_equals_duckdb_mirror_on_edge_captions(spark):
+    # the one-pass accumulator + fused dot/norm fold must reproduce the
+    # per-dimension DuckDB mirror exactly, including the zero-vector
+    # cases and captions with more distinct tokens than dimensions
+    many = " ".join(f"w{i}x" for i in range(DIMS + 9))
+    rows = [
+        (1, None, 0x5A5A),
+        (2, "", -1),
+        (3, " ?!.,;-- ", 0x1234),
+        (4, "bicycle", -42),
+        (5, "bike bike bike bike bike", 0xFFFF),
+        (6, many, 0xDEADBEEF),
+        (7, many.upper() + " !!", 0),
+    ]
+    got = {
+        r.image_id: r.align_score
+        for r in pair_alignment(_pairs_df(spark, rows)).collect()
+    }
+    want = _duckdb_scores(rows)
+    assert got == want
+    assert got[1] == got[2] == got[3] == 0.0
+    assert got[6] != 0.0  # non-vacuous: the long caption really scores
+
+
+def test_cross_modal_topk_equals_duckdb_mirror(spark):
+    import duckdb
+    import pandas as pd
+
+    from webcrawler_spark.multimodal.alignment import (
+        caption_embed_duckdb,
+        cross_modal_topk,
+        phash_embed_duckdb,
+    )
+
+    rows = [
+        (i, None if i == 5 else f"caption {i % 4} about item {i}",
+         (i * 2654435761) & ((1 << 60) - 1))
+        for i in range(14)
+    ]
+    pairs = _pairs_df(spark, rows)
+    queries = pairs.filter("image_id IN (1, 2, 5)").select(
+        F.col("image_id").alias("query_id"), "caption"
+    )
+    got = sorted(tuple(r) for r in cross_modal_topk(pairs, queries, k=4).collect())
+
+    con = duckdb.connect()
+    con.register("p", pd.DataFrame(rows, columns=["image_id", "caption", "phash"]))
+    qv, iv = caption_embed_duckdb("caption", DIMS), phash_embed_duckdb("phash", DIMS)
+    dot = f"list_sum(list_transform(range(1, {DIMS} + 1), j -> qv[j] * iv[j]))"
+    qn2 = f"list_sum(list_transform(range(1, {DIMS} + 1), j -> qv[j] * qv[j]))"
+    want = sorted(con.execute(f"""
+        WITH q AS (SELECT image_id AS query_id, {qv} AS qv FROM p
+                   WHERE image_id IN (1, 2, 5)),
+             i AS (SELECT image_id, {iv} AS iv FROM p),
+             s AS (SELECT query_id, image_id,
+                          CASE WHEN {qn2} = 0 THEN 0.0
+                               ELSE round({dot}::DOUBLE / sqrt(({qn2} * {DIMS})::DOUBLE), 6)
+                          END AS score
+                   FROM q, i WHERE image_id <> query_id)
+        SELECT query_id, image_id, score,
+               row_number() OVER (PARTITION BY query_id
+                                  ORDER BY score DESC, image_id)::INT AS rank
+        FROM s QUALIFY rank <= 4
+    """).fetchall())
+    assert got == want
+    assert len(got) == 12

@@ -94,6 +94,20 @@ def test_parse_wav_rejects_non_pcm_and_truncated():
         parse_wav(good[:30])
 
 
+def test_parse_wav_rejects_zero_rate_and_zero_channels():
+    # both would divide by zero later (reshape by channels, duration by
+    # rate); the header is refused at parse time instead
+    good = synth_wav(8, seconds=0.1)
+    ch_off, rate_off = 12 + 8 + 2, 12 + 8 + 4
+    zero_ch = good[:ch_off] + struct.pack("<H", 0) + good[ch_off + 2:]
+    zero_rate = good[:rate_off] + struct.pack("<I", 0) + good[rate_off + 4:]
+    for bad in (zero_ch, zero_rate):
+        with pytest.raises(ValueError, match="malformed fmt chunk"):
+            parse_wav(bad)
+        with pytest.raises(ValueError, match="malformed fmt chunk"):
+            decode_audio(bad)
+
+
 def test_decode_audio_wav_branch_and_downmix():
     mono = synth_wav(9, seconds=0.2)
     stereo = synth_wav(9, seconds=0.2, channels=2)

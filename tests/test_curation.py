@@ -532,3 +532,59 @@ def test_caption_dedup_keeps_best_resolution(spark):
         "image_id long, w int, h int, caption string",
     )
     assert [r.image_id for r in caption_dedup(tie).collect()] == [3]
+
+
+def test_caption_dedup_hot_caption_over_many_partitions_ties_to_min_id(spark):
+    # one hot caption spread over 12 input partitions, every member tied
+    # on pixels (8x8 = 4x16 = 16x4): the map-side partial minimums must
+    # still elect the globally smallest image_id and count every row
+    from webcrawler_spark.curation import caption_dedup
+
+    dims = [(8, 8), (4, 16), (16, 4)]
+    hot = [
+        (1000 - i, *dims[i % 3], "Stock  PHOTO of a product")
+        for i in range(120)
+    ]
+    cold = [(5000 + i, 8, 8, f"unique caption {i}") for i in range(12)]
+    df = spark.createDataFrame(
+        hot + cold, "image_id long, w int, h int, caption string"
+    ).repartition(12)
+    assert df.rdd.getNumPartitions() >= 8
+    assert min(
+        df.rdd.mapPartitions(
+            lambda it: [sum(1 for r in it if r.image_id < 5000)]
+        ).collect()
+    ) > 0  # the hot caption really lands in every partition
+    got = {r.image_id: r for r in caption_dedup(df).collect()}
+    assert set(got) == {881} | {5000 + i for i in range(12)}
+    assert got[881].n_dup == 120 and got[881].pixels == 64
+    assert all(got[5000 + i].n_dup == 1 for i in range(12))
+
+
+def test_pair_curation_keep_agrees_with_phash_clusters_on_chains(spark):
+    # A~B and B~C within 3 bits but A, C 4 bits apart, and B carries the
+    # largest id: C (id 2) shares no edge with the min id and is the
+    # smaller end of its only edge, so only the transitive component
+    # drops it; D~E is a second cluster, F a singleton
+    from webcrawler_spark.curation import pair_curation_flags
+    from webcrawler_spark.dedup.phash import phash_clusters
+
+    a = 0x0F0F0F0F0F0F0F0F
+    b, c = a ^ 0b11, a ^ 0b1111
+    d = 0x123456789ABCDEF
+    rows = [
+        (1, a), (2, c), (3, b), (4, d), (5, d ^ (1 << 50)), (6, 0x7777),
+    ]
+    df = spark.createDataFrame(
+        [(i, 64, 64, "two tokens", ph) for i, ph in rows],
+        "image_id long, w int, h int, caption string, phash long",
+    )
+    keep = {r.image_id: r.keep for r in pair_curation_flags(df).collect()}
+    canon = {
+        r.image_id: r.is_canonical
+        for r in phash_clusters(df.select("image_id", "phash")).collect()
+    }
+    assert set(canon) == {1, 2, 3, 4, 5}
+    for i, _ in rows:
+        assert keep[i] == canon.get(i, True)
+    assert keep == {1: True, 2: False, 3: False, 4: True, 5: False, 6: True}

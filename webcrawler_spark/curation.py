@@ -609,7 +609,7 @@ def domain_cap(
 # cross-modal caption dedup (keep the best image per repeated caption)
 # ---------------------------------------------------------------------------
 
-def caption_dedup(pairs: DataFrame, shards: int = 8) -> DataFrame:
+def caption_dedup(pairs: DataFrame) -> DataFrame:
     """Web image corpora repeat captions massively (LAION-style "stock
     photo of ..." boilerplate): pairs sharing one normalized caption keep
     only the highest-resolution image (ties → smaller image_id). Null or
@@ -619,11 +619,13 @@ def caption_dedup(pairs: DataFrame, shards: int = 8) -> DataFrame:
     is the group size the survivor won.
 
     Scale shape: the group key is the 60-bit caption fingerprint (the J5
-    content-dedup key), so no exchange carries caption text; the keep-one
-    election is `domain_cap(n=1)` — the two-phase top-n — because caption
-    frequency is exactly as Zipf-skewed as domains ("image", "photo" at
-    10^8 occurrences must not pick one reducer). counts is a map-side-
-    combining aggregate and its join to winners is 1:1 per fp."""
+    content-dedup key), so no exchange carries caption text. The keep-one
+    election and the group count are ONE aggregate —
+    ``min(struct(-pixels, image_id))`` and ``count(*)`` per fingerprint,
+    one exchange, no window, no join. Caption frequency is Zipf-skewed
+    ("image", "photo" at 10^8 occurrences), but both functions combine
+    map-side, so a hot caption reaches its reducer as one partial row
+    per map task, never as its raw rows."""
     base = pairs.select(
         "image_id",
         F.when(
@@ -631,24 +633,31 @@ def caption_dedup(pairs: DataFrame, shards: int = 8) -> DataFrame:
         ).alias("caption_fp"),
         (F.col("w").cast("long") * F.col("h").cast("long")).alias("pixels"),
     )
-    keyed = base.filter(F.col("caption_fp").isNotNull())
     passthrough = base.filter(F.col("caption_fp").isNull()).select(
         "image_id", "caption_fp", "pixels", F.lit(1).cast("long").alias("n_dup")
     )
-    counts = keyed.groupBy("caption_fp").agg(F.count("*").alias("n_dup"))
-    winners = domain_cap(
-        keyed,
-        1,
-        domain_col="caption_fp",
-        quality_col="pixels",
-        id_col="image_id",
-        shards=shards,
-    ).drop("domain_rank")
-    return (
-        winners.join(counts, "caption_fp")
-        .select("image_id", "caption_fp", "pixels", "n_dup")
-        .unionByName(passthrough)
+    winners = (
+        base.filter(F.col("caption_fp").isNotNull())
+        .groupBy("caption_fp")
+        .agg(
+            # most pixels first (NULL pixels last), then smaller image_id
+            F.min(
+                F.struct(
+                    F.col("pixels").isNull().alias("px_null"),
+                    (-F.col("pixels")).alias("neg_px"),
+                    "image_id",
+                )
+            ).alias("best"),
+            F.count("*").alias("n_dup"),
+        )
+        .select(
+            F.col("best.image_id").alias("image_id"),
+            "caption_fp",
+            (-F.col("best.neg_px")).alias("pixels"),
+            "n_dup",
+        )
     )
+    return winners.unionByName(passthrough)
 
 
 # ---------------------------------------------------------------------------
@@ -818,7 +827,8 @@ def pair_curation_flags(
     Scale: gates are narrow; the near-dup stage is the banded join from
     dedup/phash.py (4 band keys per GATED image, no all-pairs), and only
     gated rows enter it."""
-    from webcrawler_spark.dedup.phash import phash_clusters
+    from webcrawler_spark.dedup.cluster import connected_components
+    from webcrawler_spark.dedup.phash import phash_near_duplicates
 
     caption_ok = (
         F.col("caption").isNotNull()
@@ -829,9 +839,14 @@ def pair_curation_flags(
     ).withColumn(
         "gate_ok", F.col("caption_ok") & (F.col("w") * F.col("h") >= min_pixels)
     )
-    members = phash_clusters(
-        gated.filter("gate_ok"), max_hamming=max_hamming
-    ).select("image_id", "is_canonical")
+    # canonical = min image_id of its component (phash_clusters' rule,
+    # without the cluster_size groupBy + join nothing here reads)
+    members = connected_components(
+        phash_near_duplicates(gated.filter("gate_ok"), max_hamming=max_hamming)
+    ).select(
+        F.col("node").alias("image_id"),
+        (F.col("node") == F.col("component")).alias("is_canonical"),
+    )
     return (
         gated.join(members, "image_id", "left")
         .withColumn(

@@ -7,10 +7,10 @@ This container has no learned model, so BOTH encoders are deterministic
 hash projections — honestly a stand-in, and deliberately so: the point
 is the Spark-side plumbing (vector build, cosine, threshold gate, funnel
 counters) which is EXACTLY the surface a real CLIP deployment keeps. The
-swap points are the two ``*_embed`` functions below; a production system
-replaces them with one Arrow ``mapInPandas`` batch-inference stage
-emitting the same ``array<bigint>``/``array<float>`` columns and nothing
-else in the plan changes.
+swap points are ``caption_embed`` and the image side of
+``_cosine_vs_phash``; a production system replaces them with one Arrow
+``mapInPandas`` batch-inference stage emitting ``array<float>`` columns
+and a plain cosine, and nothing else in the plan changes.
 
 The stand-in encoders:
 
@@ -18,8 +18,9 @@ The stand-in encoders:
   dimension (bit d of the hash), summed over the caption: a signed
   random-projection bag-of-words (the same construction as SimHash's
   pre-sign accumulator, Charikar 2002).
-* ``phash_embed`` — bit d of the stored perceptual hash maps to +1/-1:
-  the image's "embedding" is its phash sign pattern.
+* the image side — bit d of the stored perceptual hash maps to +1/-1:
+  the image's "embedding" is its phash sign pattern. It is never built
+  as an array; the cosine fold reads the phash bits in place.
 
 Because both are pure Catalyst integer arithmetic on the portable hash,
 the WHOLE operator is oracle-checkable: the DuckDB mirror computes the
@@ -44,56 +45,71 @@ DIMS = 16
 ALIGN_THRESHOLD = 0.0  # stand-in default: keep above-random agreement
 
 
+def _bit_masks(dims: int) -> Column:
+    """array<bigint> literal [1, 2, 4, ..., 2^(dims-1)]: lane d tests bit d."""
+    return F.array(*[F.lit(1 << d).cast("long") for d in range(dims)])
+
+
 def caption_embed(caption: Column, dims: int = DIMS) -> Column:
     """array<bigint> signed bag-of-words projection of the caption.
+
+    One pass: each token is hashed ONCE, and the hash updates all
+    ``dims`` lanes of an array accumulator together (``zip_with``
+    against the bit-mask literal), so the expression is the same size
+    for any ``dims``.
 
     NULL caption embeds as the zero vector (scored 0.0 below, never
     aligned) rather than propagating NULL through the gate.
     """
+    masks = _bit_masks(dims)
     hashes = F.transform(tokens(F.coalesce(caption, F.lit(""))), portable_hash64)
-    return F.array(*[
-        F.aggregate(
-            hashes,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc
-            + F.when(h.bitwiseAND(F.lit(1 << d)) != 0, 1).otherwise(-1),
-        )
-        for d in range(dims)
-    ])
-
-
-def phash_embed(phash: Column, dims: int = DIMS) -> Column:
-    """array<bigint> sign pattern of the perceptual hash's low bits."""
-    return F.array(*[
-        F.when(phash.bitwiseAND(F.lit(1 << d)) != 0, F.lit(1))
-        .otherwise(F.lit(-1))
-        .cast("long")
-        for d in range(dims)
-    ])
-
-
-def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+        hashes,
+        F.array_repeat(F.lit(0).cast("long"), dims),
+        lambda acc, h: F.zip_with(
+            acc, masks, lambda a, m: a + F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1)
+        ),
+    )
+
+
+def _cosine_vs_phash(tv: Column, phash: Column, dims: int) -> Column:
+    """round(cosine(tv, phash sign pattern), 6), 0.0 for a zero ``tv``.
+
+    The image vector is bit d of the phash mapped to +1/-1, so every
+    lane of it is ±1: the lane product is ±tv[d], its square is
+    tv[d]^2, and the image norm^2 is the constant ``dims``. One fold
+    over the signed lanes yields ``dot`` and the caption norm^2 together.
+    """
+    signed = F.zip_with(
+        tv, _bit_masks(dims),
+        lambda t, m: F.when(phash.bitwiseAND(m) != 0, t).otherwise(-t),
+    )
+    return F.aggregate(
+        signed,
+        F.struct(
+            F.lit(0).cast("long").alias("dot"), F.lit(0).cast("long").alias("n2t")
+        ),
+        lambda acc, x: F.struct(
+            (acc["dot"] + x).alias("dot"), (acc["n2t"] + x * x).alias("n2t")
+        ),
+        lambda acc: F.when(acc["n2t"] == 0, F.lit(0.0)).otherwise(
+            F.round(
+                acc["dot"].cast("double")
+                / F.sqrt((acc["n2t"] * F.lit(dims)).cast("double")),
+                6,
+            )
+        ),
     )
 
 
 def alignment_score(caption: Column, phash: Column, dims: int = DIMS) -> Column:
-    """round(cosine(caption_embed, phash_embed), 6); 0.0 when either
-    vector is zero (empty/NULL caption — the image norm is always
-    sqrt(dims) > 0)."""
-    tv = caption_embed(caption, dims)
-    iv = phash_embed(phash, dims)
-    dot = _dot(tv, iv)
-    n2t = _dot(tv, tv)
-    n2i = _dot(iv, iv)
-    return F.when(n2t == 0, F.lit(0.0)).otherwise(
-        F.round(
-            dot.cast("double") / F.sqrt((n2t * n2i).cast("double")), 6
-        )
-    )
+    """round(cosine(caption_embed, phash sign pattern), 6); 0.0 when the
+    caption vector is zero (empty/NULL caption — the image norm is
+    always sqrt(dims) > 0).
+
+    Two higher-order passes per row: ``caption_embed`` over the tokens,
+    then one fold over its ``dims`` lanes for dot and norm together."""
+    return _cosine_vs_phash(caption_embed(caption, dims), phash, dims)
 
 
 def pair_alignment(
@@ -140,36 +156,26 @@ def cross_modal_topk(
     break to the smaller image_id.
 
     Scale shape: the query caption embeds ONCE per query on the
-    broadcast side; each image row embeds its phash ONCE (and its norm
-    is exactly sqrt(dims) — phash vectors are ±1 in every dimension), so
-    the per-candidate work is a single 16-lane zip_with dot against every
-    broadcast query. The only exchange is the per-query top-k, which
+    broadcast side (``caption_embed``'s one-pass vector); the
+    per-candidate work is the same single ``dims``-lane fold that
+    ``alignment_score`` runs, reading the image row's phash bits in
+    place (its vector is ±1 in every lane, norm exactly sqrt(dims)).
+    The only exchange is the per-query top-k, which
     Spark executes as per-partition heaps under the window's rank filter
     with |queries|·k-bounded output. This is the brute-force baseline of
     the retrieval family (`similarity/ann.py`'s cosine twin); the
     bucketed scale path is `EmbeddingIndex` over real embeddings."""
     q = queries.select(
         "query_id", caption_embed(F.col("caption"), dims).alias("qv")
-    ).select("query_id", "qv", _dot(F.col("qv"), F.col("qv")).alias("qn2"))
-    imgs = pairs.select(
-        "image_id", phash_embed(F.col("phash"), dims).alias("iv")
     )
-    dot = _dot(F.col("qv"), F.col("iv"))
     scored = (
-        imgs.crossJoin(F.broadcast(q))
+        pairs.select("image_id", "phash")
+        .crossJoin(F.broadcast(q))
         .filter(F.col("image_id") != F.col("query_id"))
         .select(
             "query_id",
             "image_id",
-            F.when(F.col("qn2") == 0, F.lit(0.0))
-            .otherwise(
-                F.round(
-                    dot.cast("double")
-                    / F.sqrt((F.col("qn2") * F.lit(dims)).cast("double")),
-                    6,
-                )
-            )
-            .alias("score"),
+            _cosine_vs_phash(F.col("qv"), F.col("phash"), dims).alias("score"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("image_id"))
@@ -208,7 +214,8 @@ def caption_embed_duckdb(caption_expr: str, dims: int = DIMS) -> str:
 
 
 def phash_embed_duckdb(phash_expr: str, dims: int = DIMS) -> str:
-    """DuckDB list expression mirroring ``phash_embed``."""
+    """DuckDB list expression for the phash sign pattern (+1/-1 per low
+    bit) that ``_cosine_vs_phash`` reads in place."""
     dim_exprs = ", ".join(
         f"(CASE WHEN ({phash_expr} >> {d}) & 1 = 1 THEN 1 ELSE -1 END)::BIGINT"
         for d in range(dims)

@@ -72,6 +72,9 @@ def parse_wav(data: bytes) -> tuple[np.ndarray, int, int]:
             if len(body) < 16:
                 raise ValueError("malformed fmt chunk")
             tag, ch, rate, _br, _ba, bits = struct.unpack("<HHIIHH", body[:16])
+            if ch == 0 or rate == 0:
+                # would divide by zero downstream (frame reshape, seconds)
+                raise ValueError("malformed fmt chunk")
             if tag != 1:
                 raise NotImplementedError(
                     f"WAVE format tag {tag} (non-PCM) needs a codec "
@@ -385,9 +388,9 @@ def audio_pair_funnel(pairs: DataFrame, shards: int = 4) -> DataFrame:
     2. caption gate (non-empty),
     3. repeated-caption keep-one: pairs sharing a normalized caption
        fingerprint keep the LONGEST clip (ties → smaller clip_id) via
-       the same two-phase ``domain_cap(n=1)`` election the image
-       caption dedup uses (caption frequency is Zipf-skewed; no
-       exchange carries caption text, only the 60-bit fingerprint).
+       the two-phase ``domain_cap(n=1)`` election (caption frequency
+       is Zipf-skewed; no exchange carries caption text, only the
+       60-bit fingerprint).
 
     Output: (clip_id, sample_rate, channels, duration_s, rms,
     keep_audio, caption_ok, n_dup, selected) — selected rows are the

@@ -18,9 +18,10 @@ verified, not just each stage in isolation.
 
 Scale shape (100 TB / 10^10 pairs): stages 1-2's gates are narrow; the
 shuffles are (a) the banded phash join over gated rows only, (b) the
-caption-fingerprint election over stage-1+2 survivors only (two-phase
-top-1, hot captions fan out over salt shards), (c) ONE (bucket, shard)
-exchange for packing — each stage's input is the previous stage's
+caption-fingerprint election over stage-1+2 survivors only (one
+map-side-combining aggregate per fingerprint: keep-one and group count
+together, so a hot caption ships one partial row per map task), (c) ONE
+(bucket, shard) exchange for packing — each stage's input is the previous stage's
 survivor set, so the expensive keys move monotonically less data.
 """
 
@@ -85,9 +86,9 @@ def pair_funnel(
     if cache_registry is not None:
         cache_registry.append(staged)
     s1 = staged.filter(F.col("aligned") & F.col("neardup_keep"))
-    winners = caption_dedup(
-        s1.select("image_id", "w", "h", "caption"), shards=shards
-    ).select("image_id", "n_dup")
+    winners = caption_dedup(s1.select("image_id", "w", "h", "caption")).select(
+        "image_id", "n_dup"
+    )
     # same reasoning: surv feeds both the packing input and the n_dup
     # carry — one persist instead of running the dedup election twice
     surv = s1.join(winners, "image_id", "inner").persist()
